@@ -67,7 +67,12 @@ object PlanAudit {
       " d_ann_ivf feeding the bounded PQ scan"),
     "q03_join_agg" -> ("AQE promotes the customer join to broadcast only" +
       " where the build side fits the threshold; flips with scale by" +
-      " design"))
+      " design"),
+    "q08_outer_join" -> ("the left-outer build side (fact table orders," +
+      " pruned to 3 columns) is estimated at 1.04 MiB at sf0.1 and" +
+      " 10.33 MiB at sf1, crossing the 10 MiB autoBroadcastJoinThreshold:" +
+      " broadcast at sf0.1, sort-merge at sf1 by design (facts are never" +
+      " hinted)"))
 
   /** Parse a plan-audit artifact into key -> (op -> count). */
   def parse(json: String): Map[String, Map[String, Int]] = {

@@ -3,7 +3,7 @@ package graft.connector
 import graft.model.Json
 import org.apache.spark.sql.connector.catalog.{View, ViewInfo}
 import org.apache.spark.sql.types.StructType
-import java.nio.file.{Files, Path, StandardOpenOption}
+import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
 
 /** Versioned SQL-view metadata, persisted table-adjacent (the successor
@@ -15,7 +15,7 @@ import scala.jdk.CollectionConverters._
   * Layout: `warehouse/ns/viewName/viewmeta/v{N}.view-metadata.json`.
   * Each file carries the FULL state (all versions), like table metadata
   * carries all snapshots; the current state is the highest N, and a new
-  * version (CREATE OR REPLACE, ALTER) writes N+1 with CREATE_NEW — the
+  * version (CREATE OR REPLACE, ALTER) claims N+1 exclusively — the
   * same atomic optimistic-concurrency commit as tables. `viewmeta/` is
   * deliberately distinct from a table's `metadata/` dir so view dirs can
   * never be mistaken for table dirs by the TableCatalog paths.
@@ -81,7 +81,10 @@ private[graft] object GraftViews {
 
   /** Write `st` as version file `expectedVersion + 1`, refusing if the
     * current version file is not `expectedVersion` — the REST server's
-    * commit claim (CREATE_NEW is the serializer, exactly like tables).
+    * commit claim. The claim is a hard link of a fully written temp file:
+    * link(2) fails if the slot exists (the serializer, like CREATE_NEW)
+    * and publishes the whole document at once, so a concurrent reader
+    * never parses a created-but-unwritten version file.
     */
   def commitState(viewPath: Path, expectedVersion: Int,
       st: ViewState): Int = {
@@ -93,8 +96,11 @@ private[graft] object GraftViews {
         s"view at $viewPath moved: expected version $expectedVersion, " +
           s"found $cur")
     val n = expectedVersion + 1
-    Files.writeString(dir.resolve(f"v$n%05d.view-metadata.json"),
-      toJson(st), StandardOpenOption.CREATE_NEW)
+    val tmp = Files.createTempFile(dir, ".v", ".tmp")
+    try {
+      Files.writeString(tmp, toJson(st))
+      Files.createLink(dir.resolve(f"v$n%05d.view-metadata.json"), tmp)
+    } finally Files.deleteIfExists(tmp)
     n
   }
 

@@ -19,7 +19,11 @@ import org.apache.spark.sql.functions._
   * embeddings get a tiny deterministic per-replica perturbation so ANN
   * top-k has no 10-way ties.
   *
-  * Usage: runMain graft.tools.GenScale [srcDir] [outDir] [replicas]
+  * Usage: runMain graft.tools.GenScale [srcDir] [outDir] [replicas] [files]
+  *
+  * `files` (default 32) is the number of parquet files written per table.
+  * It changes the tables' static size estimates, and so which joins fall
+  * under the broadcast threshold.
   */
 object GenScale {
   def main(args: Array[String]): Unit = {

@@ -324,4 +324,38 @@ class ConcurrencySpec extends SparkSpec {
     assert(st.versions.size == writers + 1,
       s"expected ${writers + 1} versions, got ${st.versions.size}")
   }
+
+  test("a reader racing view commits never sees a half-written version") {
+    import graft.connector.GraftViews
+    val p = java.nio.file.Files.createTempDirectory("conc-view-read")
+      .resolve("v")
+    def version(id: Int) = GraftViews.ViewVersion(id, 0L, "alter",
+      "SELECT 1 AS one", "spark_catalog", Seq("db"), "one INT",
+      Seq("one"), Seq.empty, Seq.empty, Map("k" -> id.toString))
+    GraftViews.commitState(p, 0, GraftViews.nextState(p, None, version(1)))
+    val commits = 300
+    @volatile var done = false
+    val reader = java.util.concurrent.Executors.newSingleThreadExecutor()
+    try {
+      // every load must parse a complete state whose current version is
+      // in its own history — an exclusive-create claim that is visible
+      // before its bytes are written fails here
+      val reads = reader.submit(new java.util.concurrent.Callable[Int] {
+        def call(): Int = {
+          var n = 0
+          while (!done) { GraftViews.load(p).get.current; n += 1 }
+          n
+        }
+      })
+      try (1 until commits).foreach { i =>
+        val (n, st) = GraftViews.loadWithVersion(p).get
+        GraftViews.commitState(p, n,
+          GraftViews.nextState(p, Some(st), version(i + 1)))
+      } finally done = true
+      assert(reads.get(300, java.util.concurrent.TimeUnit.SECONDS) > 0)
+    } finally reader.shutdown()
+    val st = GraftViews.load(p).get
+    assert(st.versions.size == commits)
+    assert(st.current.properties("k") == commits.toString)
+  }
 }

@@ -31,8 +31,11 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("committed sf0.1 vs sf1 artifacts diff only on intended keys") {
-    val p01 = Paths.get("/root/repo/PLAN_AUDIT_sf0.1.json")
-    val p1 = Paths.get("/root/repo/PLAN_AUDIT_sf1.json")
+    // relative to the forked test JVM's working directory, which sbt sets
+    // to the project base dir (Test / fork := true) — so the gate reads
+    // THIS checkout's artifacts wherever it lives
+    val p01 = Paths.get("PLAN_AUDIT_sf0.1.json")
+    val p1 = Paths.get("PLAN_AUDIT_sf1.json")
     assume(Files.exists(p01) && Files.exists(p1),
       "plan-audit artifacts not present in this checkout")
     val a = PlanAudit.parse(Files.readString(p01))
